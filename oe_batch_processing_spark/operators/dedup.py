@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import scoped_conf
 from oe_batch_processing_spark.tables import load_table, persist_once
 
 # --- shared shingling ------------------------------------------------------
@@ -914,6 +915,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_SMALL_EDGES = 100_000  # below this, the loop runs 1-partition/no-AQE
+# session confs of the small-graph loops here and in graph.star_labels
+SMALL_GRAPH_CONFS = {"spark.sql.adaptive.enabled": "false",
+                     "spark.sql.shuffle.partitions": "1"}
 _CC_PLAIN_PERSIST_ROUNDS = 6  # small-graph rounds that may keep plain
 # persists before falling back to lineage-truncating checkpoints
 # (4^6 ≈ 4k logical-plan nodes — far below the canonicalization cliff)
@@ -929,8 +933,8 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
     Size-adaptive execution (the star-CC recipe, graph.py): a SMALL
     materialized edge set pays more in per-round AQE re-planning and
     32-way shuffles than in actual work, so below _CC_SMALL_EDGES the
-    loop drops to one partition with AQE off (session confs restored in
-    the finally). A large edge set — the 10x/30x probes' 0.25M/2.4M-pair
+    loop drops to one partition with AQE off (session confs scoped to the
+    loop). A large edge set — the 10x/30x probes' 0.25M/2.4M-pair
     graphs and any real corpus — keeps AQE and the full shuffle width;
     the plan shape is identical, only the knobs move.
 
@@ -956,7 +960,6 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
     small_graph = n_edges < _CC_SMALL_EDGES
-    saved: dict[str, str] = {}
     pinned: list[DataFrame] = []  # plain persists to release before return
 
     def _pin(df: DataFrame, rnd: int) -> DataFrame:
@@ -972,22 +975,16 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
         # bound, so this halves its real cost.
         return df.localCheckpoint(eager=False)
 
-    try:
-        # Conf mutation and the eager edges checkpoint both live INSIDE
-        # the try: the checkpoint runs a real distributed job, and a
-        # failure there must still restore the session confs in finally.
-        # Both checkpoint branches read the materialized pairs cache
-        # (each union branch a cache scan), never rebuild the upstream
-        # pipeline; the pairs cache is released right after.
+    # The conf scope covers the eager edges checkpoint: it runs a real
+    # distributed job, and a failure there must still restore the confs.
+    # The checkpoint reads the materialized pairs cache (each union branch
+    # a cache scan), never rebuilds the upstream pipeline; the pairs cache
+    # is released right after.
+    with scoped_conf(spark, SMALL_GRAPH_CONFS if small_graph else {}):
         if small_graph:
-            for k, v in (("spark.sql.adaptive.enabled", "false"),
-                         ("spark.sql.shuffle.partitions", "1")):
-                saved[k] = spark.conf.get(k)
-                spark.conf.set(k, v)
-            edges = edges.coalesce(1).localCheckpoint(eager=True)
-        else:
-            # edges becomes a leaf for every round below
-            edges = edges.localCheckpoint(eager=True)
+            edges = edges.coalesce(1)
+        # edges becomes a leaf for every round below
+        edges = edges.localCheckpoint(eager=True)
         pairs.unpersist()
         labels = _pin(
             edges.select(F.col("doc_a").alias("doc"))
@@ -1031,9 +1028,6 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
             if df is not labels:
                 df.unpersist()
         return labels
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 # --- embedding-cosine near-dedup -------------------------------------------

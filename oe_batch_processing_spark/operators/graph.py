@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE, SMALL_GRAPH_CONFS
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import scoped_conf
 from oe_batch_processing_spark.tables import load_table, table_row_count
 
 PR_ITERS = 3
@@ -750,30 +752,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
     # shuffle width — the plan shape is identical, only the knobs move.
     n_edges = pairs.count()  # fills the pairs cache
     small_graph = n_edges < _STAR_SMALL_EDGES
-    saved = {}
-    if small_graph:
-        for k, v in (("spark.sql.adaptive.enabled", "false"),
-                     ("spark.sql.shuffle.partitions", "1")):
-            saved[k] = spark.conf.get(k)
-            spark.conf.set(k, v)
-    edges_lazy = pairs.select(
-        F.col("doc_a").cast("long").alias("u"),
-        F.col("doc_b").cast("long").alias("v"),
-    )
-    if small_graph:
-        edges_lazy = edges_lazy.coalesce(1)
-    # localCheckpoint: TRUNCATE lineage, not just cache it (see the loop
-    # note below); the fill reads the just-materialized pairs cache.
-    edges = edges_lazy.localCheckpoint(eager=True)
-    # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
-    # is consumed exactly once by the final left join — an eager
-    # checkpoint here was one more ~0.4 s driver action per invocation
-    # on an action-latency-bound small graph, for no reuse.
-    all_nodes = (
-        edges.select(F.col("u").alias("doc"))
-        .union(edges.select(F.col("v").alias("doc")))
-        .distinct()
-    )
 
     def _checksum(e: DataFrame):
         row = e.agg(
@@ -816,9 +794,29 @@ def star_labels(pairs: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False)
         )
 
-    cur = edges
-    prev_sum = None
-    try:
+    # The conf scope covers the eager edges checkpoint, the node build and
+    # every round's checksum job.
+    with scoped_conf(spark, SMALL_GRAPH_CONFS if small_graph else {}):
+        edges_lazy = pairs.select(
+            F.col("doc_a").cast("long").alias("u"),
+            F.col("doc_b").cast("long").alias("v"),
+        )
+        if small_graph:
+            edges_lazy = edges_lazy.coalesce(1)
+        # localCheckpoint: TRUNCATE lineage, not just cache it (see the loop
+        # note below); the fill reads the just-materialized pairs cache.
+        edges = edges_lazy.localCheckpoint(eager=True)
+        # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
+        # is consumed exactly once by the final left join — an eager
+        # checkpoint here was one more ~0.4 s driver action per invocation
+        # on an action-latency-bound small graph, for no reuse.
+        all_nodes = (
+            edges.select(F.col("u").alias("doc"))
+            .union(edges.select(F.col("v").alias("doc")))
+            .distinct()
+        )
+        cur = edges
+        prev_sum = None
         for _round in range(20):  # log^2 bound; settles in ~3
             cur = _one_round(cur)
             new_sum = _checksum(cur)
@@ -828,9 +826,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
         # final star: every edge points node -> component root (= component
         # min); roots label themselves; isolated-in-star nodes keep identity
         labels = cur.select(F.col("u").alias("doc"), F.col("v").alias("lbl"))
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     if owns_cache:
         pairs.unpersist()
     return all_nodes.join(labels, "doc", "left").select(
@@ -839,7 +834,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
 
 
 # shared oracle: the star algorithm must reproduce the transitive closure
-from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE  # noqa: E402
 from oe_batch_processing_spark import registry as _registry  # noqa: E402
 
 _registry.ORACLE["graph_connected_components_star"] = CC_TRANSITIVE_ORACLE

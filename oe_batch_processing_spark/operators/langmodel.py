@@ -670,8 +670,8 @@ def _bpe_driver_merges(
 def _bpe_train_vocab(
     spark: SparkSession, sf_dir: str, k: int = _BPE_K
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Run the K-round BPE training loop; return (merge rules, persisted
-    final vocab frame (word, freq, s)). The caller owns the persist.
+    """Run the K-round BPE loop -> (merge rules, final vocab (word, freq, s)),
+    persisted (the caller owns it) only on the distributed path.
 
     Size-adaptive execution (r17, the ``_cc_labels_adaptive`` recipe): the
     loop's input is the VOCABULARY table — Zipf-bounded, orders of

@@ -21,7 +21,8 @@ Grammar implemented for real:
   Clear/EOI codes, dict growth to 4095 with mid-stream Clear re-emission
   (the encoder clears whenever the table fills, so multi-KB rasters
   exercise the reset path), LSB-first bit packing (the OPPOSITE bit
-  order of JPEG's entropy stream), 255-byte sub-block framing.
+  order of JPEG's entropy stream) through the shared ``LsbWriter`` /
+  ``LsbReader`` of ``functions/bitio.py``, 255-byte sub-block framing.
 
 Reference scope note: the reference engine (SURVEY.md §2.1) has no media
 path; this extends the §2.2 multimodal family. Since round 9 no codec
@@ -41,6 +42,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.functions.bitio import LsbReader, LsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -57,37 +59,13 @@ def _interlace_order(h: int) -> list[int]:
     )
 
 
-class _LsbBitWriter:
-    """LSB-first bit packer (GIF's LZW bit order)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, width: int) -> None:
-        self.acc |= code << self.n
-        self.n += width
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def flush(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
 def _lzw_compress(data: bytes, mcs: int = _MCS) -> bytes:
     """GIF-variant LZW: emits Clear first, re-emits Clear when the table
     reaches 4096 entries, ends with EOI; variable code width grows when
     the next code would not fit."""
     clear = 1 << mcs
     eoi = clear + 1
-    w = _LsbBitWriter()
+    w = LsbWriter()
 
     def reset():
         return {bytes([i]): i for i in range(clear)}, eoi + 1, mcs + 1
@@ -122,22 +100,12 @@ def _lzw_decompress(data: bytes, mcs: int = _MCS) -> bytes:
     clear = 1 << mcs
     eoi = clear + 1
     out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
+    r = LsbReader(data)
     width = mcs + 1
     table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
     prev: bytes | None = None
     while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated LZW stream (no EOI)")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
+        code = r.get(width)
         if code == clear:
             table = [bytes([i]) for i in range(clear)] + [b"", b""]
             width = mcs + 1

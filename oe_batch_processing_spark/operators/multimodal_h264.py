@@ -10,7 +10,8 @@ emulation-prevention-byte insertion — and a decoder that walks the start
 codes, validates every NAL header bit, parses SPS/PPS/slice headers field
 by field (ue(v)/se(v) Exp-Golomb, fixed-width frame_num), strips and
 validates emulation prevention, enforces the pcm alignment zero bits and
-rbsp_trailing_bits, and reconstructs the exact samples.
+rbsp_trailing_bits, and reconstructs the exact samples. Bits go through
+the MSB-first pair of ``functions/bitio.py``.
 
 Why I-PCM makes the full hash oracle possible: PCM macroblocks carry the
 samples verbatim (spec clause 8.3.5: no prediction, no transform, no
@@ -55,6 +56,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.functions.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -63,107 +65,48 @@ MB_BYTES = 384          # 256 luma + 64 Cb + 64 Cr (4:2:0, 8-bit)
 ZERO_RUN = 8            # leading luma zeros in each stream's first MB
 
 
-# --- bit I/O ------------------------------------------------------------------
+# --- Exp-Golomb and RBSP syntax over the shared MSB-first bit I/O -------------
 
 
-class BitWriter:
-    """MSB-first bit writer (H.264 bit order)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.nbits = 0
-
-    def ue(self, value: int) -> None:
-        """Unsigned Exp-Golomb: (leading zeros) + binary(value+1)."""
-        v = value + 1
-        n = v.bit_length()
-        self.write(0, n - 1)
-        self.write(v, n)
-
-    def se(self, value: int) -> None:
-        """Signed Exp-Golomb: k = 2v-1 for v>0, -2v for v<=0."""
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def align_zero(self) -> None:
-        """pcm_alignment_zero_bit: zeros to the next byte boundary."""
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def write_bytes(self, b: bytes) -> None:
-        if self.nbits:
-            raise ValueError("write_bytes on unaligned writer")
-        self.buf.extend(b)
-
-    def trailing(self) -> bytes:
-        """rbsp_trailing_bits: stop bit then zero-pad; returns the RBSP."""
-        self.write(1, 1)
-        self.align_zero()
-        return bytes(self.buf)
+def write_ue(w: MsbWriter, value: int) -> None:
+    """Unsigned Exp-Golomb: value+1 in 2*bitlen(value+1)-1 bits."""
+    v = value + 1
+    w.write(v, 2 * v.bit_length() - 1)
 
 
-class BitReader:
-    """MSB-first bit reader with exhaustion checks."""
+def write_se(w: MsbWriter, value: int) -> None:
+    """Signed Exp-Golomb: k = 2v-1 for v>0, -2v for v<=0."""
+    write_ue(w, 2 * value - 1 if value > 0 else -2 * value)
 
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
 
-    def read(self, nbits: int) -> int:
-        if self.pos + nbits > 8 * len(self.data):
-            raise ValueError("bitstream exhausted")
-        v = 0
-        for _ in range(nbits):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
+def write_trailing(w: MsbWriter) -> bytes:
+    """rbsp_trailing_bits: stop bit then zero-pad; returns the RBSP."""
+    w.write(1, 1)
+    return w.finish()
 
-    def ue(self) -> int:
-        zeros = 0
-        while self.read(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("Exp-Golomb prefix too long")
-        return (1 << zeros) - 1 + self.read(zeros) if zeros else 0
 
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+def read_ue(r: MsbReader) -> int:
+    zeros = 0
+    while not r.read_bit():
+        zeros += 1
+        if zeros > 31:
+            raise ValueError("Exp-Golomb prefix too long")
+    return (1 << zeros) - 1 + r.read(zeros)
 
-    def align_check_zero(self) -> None:
-        """Consume pcm_alignment_zero_bit run; each must be zero."""
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("nonzero pcm_alignment_zero_bit")
 
-    def read_bytes(self, n: int) -> bytes:
-        if self.pos & 7:
-            raise ValueError("read_bytes on unaligned reader")
-        start = self.pos >> 3
-        if start + n > len(self.data):
-            raise ValueError("PCM samples truncated")
-        self.pos += 8 * n
-        return self.data[start:start + n]
+def read_se(r: MsbReader) -> int:
+    k = read_ue(r)
+    return (k + 1) // 2 if k % 2 else -(k // 2)
 
-    def trailing(self) -> None:
-        """rbsp_trailing_bits: stop bit, zero pad, then nothing."""
-        if self.read(1) != 1:
-            raise ValueError("missing rbsp stop bit")
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("nonzero rbsp trailing bit")
-        if self.pos != 8 * len(self.data):
-            raise ValueError("trailing bytes after rbsp_trailing_bits")
+
+def check_trailing(r: MsbReader) -> None:
+    """rbsp_trailing_bits: stop bit, zero pad, then nothing."""
+    if r.read(1) != 1:
+        raise ValueError("missing rbsp stop bit")
+    if r.read(-r.pos % 8):
+        raise ValueError("nonzero rbsp trailing bit")
+    if r.pos != 8 * len(r.data):
+        raise ValueError("trailing bytes after rbsp_trailing_bits")
 
 
 # --- emulation prevention (RBSP <-> EBSP) -------------------------------------
@@ -222,64 +165,64 @@ def _nal(nal_type: int, rbsp: bytes, long_start: bool) -> bytes:
 def encode_sps(mb_w: int, mb_h: int) -> bytes:
     """Baseline SPS (profile_idc 66, level 1.0, pic_order_cnt_type 2,
     frame_mbs_only)."""
-    w = BitWriter()
-    w.write(66, 8)   # profile_idc: Baseline
-    w.write(0, 8)    # constraint flags + reserved_zero_2bits
-    w.write(10, 8)   # level_idc 1.0
-    w.ue(0)          # seq_parameter_set_id
-    w.ue(0)          # log2_max_frame_num_minus4 -> frame_num is u(4)
-    w.ue(2)          # pic_order_cnt_type 2 (no further POC fields)
-    w.ue(0)          # max_num_ref_frames
-    w.write(0, 1)    # gaps_in_frame_num_value_allowed_flag
-    w.ue(mb_w - 1)   # pic_width_in_mbs_minus1
-    w.ue(mb_h - 1)   # pic_height_in_map_units_minus1
-    w.write(1, 1)    # frame_mbs_only_flag
-    w.write(1, 1)    # direct_8x8_inference_flag
-    w.write(0, 1)    # frame_cropping_flag
-    w.write(0, 1)    # vui_parameters_present_flag
-    return w.trailing()
+    w = MsbWriter()
+    w.write(66, 8)         # profile_idc: Baseline
+    w.write(0, 8)          # constraint flags + reserved_zero_2bits
+    w.write(10, 8)         # level_idc 1.0
+    write_ue(w, 0)         # seq_parameter_set_id
+    write_ue(w, 0)         # log2_max_frame_num_minus4 -> frame_num is u(4)
+    write_ue(w, 2)         # pic_order_cnt_type 2 (no further POC fields)
+    write_ue(w, 0)         # max_num_ref_frames
+    w.write(0, 1)          # gaps_in_frame_num_value_allowed_flag
+    write_ue(w, mb_w - 1)  # pic_width_in_mbs_minus1
+    write_ue(w, mb_h - 1)  # pic_height_in_map_units_minus1
+    w.write(1, 1)          # frame_mbs_only_flag
+    w.write(1, 1)          # direct_8x8_inference_flag
+    w.write(0, 1)          # frame_cropping_flag
+    w.write(0, 1)          # vui_parameters_present_flag
+    return write_trailing(w)
 
 
 def encode_pps() -> bytes:
-    w = BitWriter()
-    w.ue(0)          # pic_parameter_set_id
-    w.ue(0)          # seq_parameter_set_id
-    w.write(0, 1)    # entropy_coding_mode_flag (CAVLC)
-    w.write(0, 1)    # bottom_field_pic_order_in_frame_present_flag
-    w.ue(0)          # num_slice_groups_minus1
-    w.ue(0)          # num_ref_idx_l0_default_active_minus1
-    w.ue(0)          # num_ref_idx_l1_default_active_minus1
-    w.write(0, 1)    # weighted_pred_flag
-    w.write(0, 2)    # weighted_bipred_idc
-    w.se(0)          # pic_init_qp_minus26
-    w.se(0)          # pic_init_qs_minus26
-    w.se(0)          # chroma_qp_index_offset
-    w.write(0, 1)    # deblocking_filter_control_present_flag
-    w.write(0, 1)    # constrained_intra_pred_flag
-    w.write(0, 1)    # redundant_pic_cnt_present_flag
-    return w.trailing()
+    w = MsbWriter()
+    write_ue(w, 0)         # pic_parameter_set_id
+    write_ue(w, 0)         # seq_parameter_set_id
+    w.write(0, 1)          # entropy_coding_mode_flag (CAVLC)
+    w.write(0, 1)          # bottom_field_pic_order_in_frame_present_flag
+    write_ue(w, 0)         # num_slice_groups_minus1
+    write_ue(w, 0)         # num_ref_idx_l0_default_active_minus1
+    write_ue(w, 0)         # num_ref_idx_l1_default_active_minus1
+    w.write(0, 1)          # weighted_pred_flag
+    w.write(0, 2)          # weighted_bipred_idc
+    write_se(w, 0)         # pic_init_qp_minus26
+    write_se(w, 0)         # pic_init_qs_minus26
+    write_se(w, 0)         # chroma_qp_index_offset
+    w.write(0, 1)          # deblocking_filter_control_present_flag
+    w.write(0, 1)          # constrained_intra_pred_flag
+    w.write(0, 1)          # redundant_pic_cnt_present_flag
+    return write_trailing(w)
 
 
 def encode_idr_ipcm(mbs: list[bytes]) -> bytes:
     """One IDR slice covering the whole picture, every macroblock I_PCM
     (mb_type 25): slice header, then per MB the mb_type, the alignment
     zero bits, and the raw 384 sample bytes."""
-    w = BitWriter()
-    w.ue(0)          # first_mb_in_slice
-    w.ue(7)          # slice_type 7: I (all slices in picture are I)
-    w.ue(0)          # pic_parameter_set_id
-    w.write(0, 4)    # frame_num, u(log2_max_frame_num)=u(4)
-    w.ue(0)          # idr_pic_id
-    w.write(0, 1)    # no_output_of_prior_pics_flag   (dec_ref_pic_marking,
-    w.write(0, 1)    # long_term_reference_flag        IDR variant)
-    w.se(0)          # slice_qp_delta
+    w = MsbWriter()
+    write_ue(w, 0)         # first_mb_in_slice
+    write_ue(w, 7)         # slice_type 7: I (all slices in picture are I)
+    write_ue(w, 0)         # pic_parameter_set_id
+    w.write(0, 4)          # frame_num, u(log2_max_frame_num)=u(4)
+    write_ue(w, 0)         # idr_pic_id
+    w.write(0, 1)          # no_output_of_prior_pics_flag   (dec_ref_pic_marking,
+    w.write(0, 1)          # long_term_reference_flag        IDR variant)
+    write_se(w, 0)         # slice_qp_delta
     for mb in mbs:
         if len(mb) != MB_BYTES:
             raise ValueError(f"I_PCM macroblock must be {MB_BYTES} bytes")
-        w.ue(25)     # mb_type: I_PCM
-        w.align_zero()           # pcm_alignment_zero_bit
-        w.write_bytes(mb)        # pcm_sample_luma + chroma, 8-bit
-    return w.trailing()
+        write_ue(w, 25)   # mb_type: I_PCM
+        w.align(0)        # pcm_alignment_zero_bit
+        w.write(int.from_bytes(mb, "big"), 8 * MB_BYTES)  # 8-bit samples
+    return write_trailing(w)
 
 
 def mux_annexb(mb_w: int, mb_h: int, frames: list[list[bytes]]) -> bytes:
@@ -327,22 +270,22 @@ def split_annexb(b: bytes) -> list[bytes]:
 
 
 def parse_sps(rbsp: bytes) -> tuple[int, int]:
-    r = BitReader(rbsp)
+    r = MsbReader(rbsp)
     profile = r.read(8)
     if profile != 66:
         raise ValueError(f"expected Baseline profile 66, got {profile}")
     r.read(8)  # constraint flags
     r.read(8)  # level_idc
-    if r.ue() != 0:
+    if read_ue(r) != 0:
         raise ValueError("unexpected seq_parameter_set_id")
-    if r.ue() != 0:
+    if read_ue(r) != 0:
         raise ValueError("unsupported log2_max_frame_num_minus4")
-    if r.ue() != 2:
+    if read_ue(r) != 2:
         raise ValueError("unsupported pic_order_cnt_type")
-    r.ue()  # max_num_ref_frames
+    read_ue(r)  # max_num_ref_frames
     r.read(1)  # gaps_in_frame_num_value_allowed_flag
-    mb_w = r.ue() + 1
-    mb_h = r.ue() + 1
+    mb_w = read_ue(r) + 1
+    mb_h = read_ue(r) + 1
     if r.read(1) != 1:
         raise ValueError("frame_mbs_only_flag must be 1")
     r.read(1)  # direct_8x8_inference_flag
@@ -350,48 +293,49 @@ def parse_sps(rbsp: bytes) -> tuple[int, int]:
         raise ValueError("frame cropping unsupported")
     if r.read(1) != 0:
         raise ValueError("VUI unsupported")
-    r.trailing()
+    check_trailing(r)
     return mb_w, mb_h
 
 
 def parse_pps(rbsp: bytes) -> None:
-    r = BitReader(rbsp)
-    if r.ue() != 0 or r.ue() != 0:
+    r = MsbReader(rbsp)
+    if read_ue(r) != 0 or read_ue(r) != 0:
         raise ValueError("unexpected PPS/SPS id")
     if r.read(1) != 0:
         raise ValueError("CABAC unsupported (entropy_coding_mode_flag)")
     r.read(1)
-    if r.ue() != 0:
+    if read_ue(r) != 0:
         raise ValueError("slice groups unsupported")
-    r.ue(), r.ue()
+    read_ue(r), read_ue(r)
     r.read(1), r.read(2)
-    r.se(), r.se(), r.se()
+    read_se(r), read_se(r), read_se(r)
     r.read(1), r.read(1), r.read(1)
-    r.trailing()
+    check_trailing(r)
 
 
 def parse_idr_ipcm(rbsp: bytes, n_mbs: int) -> list[bytes]:
-    r = BitReader(rbsp)
-    if r.ue() != 0:
+    r = MsbReader(rbsp)
+    if read_ue(r) != 0:
         raise ValueError("first_mb_in_slice != 0")
-    st = r.ue()
+    st = read_ue(r)
     if st not in (2, 7):
         raise ValueError(f"not an I slice (slice_type {st})")
-    if r.ue() != 0:
+    if read_ue(r) != 0:
         raise ValueError("unexpected pic_parameter_set_id")
     if r.read(4) != 0:
         raise ValueError("nonzero frame_num in IDR")
-    r.ue()       # idr_pic_id
+    read_ue(r)       # idr_pic_id
     r.read(1), r.read(1)  # dec_ref_pic_marking (IDR)
-    r.se()       # slice_qp_delta
+    read_se(r)       # slice_qp_delta
     mbs = []
     for _ in range(n_mbs):
-        mb_type = r.ue()
+        mb_type = read_ue(r)
         if mb_type != 25:
             raise ValueError(f"expected I_PCM mb_type 25, got {mb_type}")
-        r.align_check_zero()
+        if r.read(-r.pos % 8):  # pcm_alignment_zero_bit run
+            raise ValueError("nonzero pcm_alignment_zero_bit")
         mbs.append(r.read_bytes(MB_BYTES))
-    r.trailing()
+    check_trailing(r)
     return mbs
 
 

@@ -7,7 +7,9 @@ run-length-AC Huffman entropy coding with byte stuffing and restart
 markers, full JFIF marker grammar) and a decoder that re-parses the
 marker stream (DQT/DHT/SOF0/DRI/SOS), rebuilds canonical Huffman tables
 FROM THE FILE, entropy-decodes with 0xFF00 unstuffing and RSTn predictor
-resets, dequantizes, inverse-DCTs, and reconstructs pixels.
+resets, dequantizes, inverse-DCTs, and reconstructs pixels. Entropy bits
+use the MSB-first pair of ``functions/bitio.py``, one restart interval
+at a time.
 
 Hash-oracle strategy (same discipline as multimodal_png_decode): the
 oracled corpus is built from 8x8-FLAT blocks, where baseline JPEG is
@@ -57,11 +59,13 @@ is unchanged.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.functions.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -164,41 +168,14 @@ def _category(v: int) -> int:
     return int(abs(v)).bit_length()
 
 
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG byte stuffing (0xFF -> 0xFF00).
-    Whole codes are appended at once and bytes drained in a batch —
-    per-bit Python loops were the encoder hot spot."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-        self.acc &= (1 << self.n) - 1
-
-    def align(self) -> None:
-        """Pad to a byte boundary with 1-bits (spec rule before markers)."""
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
 def _encode_block(zz: list[int], pred: int, dc_tab: dict, ac_tab: dict,
-                  w: _BitWriter) -> int:
+                  w: MsbWriter) -> int:
     diff = zz[0] - pred
     s = _category(diff)
     code, length = dc_tab[s]
-    w.put(code, length)
+    w.write(code, length)
     if s:
-        w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        w.write(diff if diff > 0 else diff + (1 << s) - 1, s)
     run = 0
     last_nz = 0
     for k in range(63, 0, -1):
@@ -211,17 +188,24 @@ def _encode_block(zz: list[int], pred: int, dc_tab: dict, ac_tab: dict,
             continue
         while run > 15:
             code, length = ac_tab[0xF0]  # ZRL
-            w.put(code, length)
+            w.write(code, length)
             run -= 16
         s = _category(zz[k])
         code, length = ac_tab[(run << 4) | s]
-        w.put(code, length)
-        w.put(zz[k] if zz[k] > 0 else zz[k] + (1 << s) - 1, s)
+        w.write(code, length)
+        w.write(zz[k] if zz[k] > 0 else zz[k] + (1 << s) - 1, s)
         run = 0
     if last_nz != 63:
         code, length = ac_tab[0x00]  # EOB
-        w.put(code, length)
+        w.write(code, length)
     return zz[0]
+
+
+def _stuffed_interval(w: MsbWriter) -> bytes:
+    """One restart interval's entropy bytes: 1-bit padding (the rule before
+    a marker), then every 0xFF stuffed with 0x00 so no marker appears."""
+    w.align(1)
+    return w.finish().replace(b"\xff", b"\xff\x00")
 
 
 def _seg(marker: int, payload: bytes) -> bytes:
@@ -367,7 +351,7 @@ def encode_jpeg(raster: bytes, w: int, h: int, ch: int,
     zzs = np.rint(f.reshape(len(block_views), 64)[:, zz_idx] / qzz)
     zzs = zzs.astype(np.int64)
 
-    writer = _BitWriter()
+    writer = MsbWriter()
     preds = [0] * ncomp
     rst = 0
     total_mcus = mby * mbx
@@ -375,8 +359,9 @@ def encode_jpeg(raster: bytes, w: int, h: int, ch: int,
     bi = 0
     for mcu in range(total_mcus):
         if restart_interval and mcu and mcu % restart_interval == 0:
-            writer.align()
-            writer.out += bytes([0xFF, 0xD0 + rst])
+            out += _stuffed_interval(writer)
+            out += bytes([0xFF, 0xD0 + rst])
+            writer = MsbWriter()
             rst = (rst + 1) % 8
             preds = [0] * ncomp
         for _ in range(per_mcu):
@@ -387,68 +372,28 @@ def encode_jpeg(raster: bytes, w: int, h: int, ch: int,
                 ac_lum, writer)
             bi += 1
     assert bi == len(block_views)
-    writer.align()
-    out += writer.out
+    out += _stuffed_interval(writer)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
-class _BitReader:
-    """MSB-first reader over the entropy segment with 0xFF00 unstuffing.
-    Markers are only legal at byte-aligned restart points; hitting one
-    mid-entropy raises. Bytes accumulate into one int so multi-bit
-    extraction is a shift+mask, not a per-bit loop."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.d = data
-        self.i = pos
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> None:
-        if self.i >= len(self.d):
-            raise ValueError("truncated entropy stream")
-        b = self.d[self.i]
-        if b == 0xFF:
-            if self.i + 1 >= len(self.d):
-                raise ValueError("truncated entropy stream")
-            nxt = self.d[self.i + 1]
-            if nxt != 0x00:
-                raise ValueError(
-                    f"unexpected marker 0xFF{nxt:02X} inside entropy data"
-                )
-            self.i += 2
-        else:
-            self.i += 1
-        self.acc = ((self.acc << 8) | b) & 0xFFFFFFFF
-        self.n += 8
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            self._fill()
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def read_bits(self, k: int) -> int:
-        while self.n < k:
-            self._fill()
-        self.n -= k
-        return (self.acc >> self.n) & ((1 << k) - 1)
-
-    def align_and_expect_rst(self, idx: int) -> None:
-        self.acc = 0
-        self.n = 0  # drop padding bits
-        if self.i + 1 >= len(self.d):
-            raise ValueError("truncated at restart boundary")
-        if self.d[self.i] != 0xFF or self.d[self.i + 1] != 0xD0 + idx:
-            raise ValueError(
-                f"expected RST{idx} at offset {self.i}, found "
-                f"{self.d[self.i]:02X}{self.d[self.i + 1]:02X}"
-            )
-        self.i += 2
+_MARKER = re.compile(rb"\xff[^\x00]")  # 0xFF not followed by a stuffing 0x00
 
 
-def _decode_huffman(reader: _BitReader, table: dict) -> int:
+def _read_interval(b: bytes, start: int) -> MsbReader:
+    """Un-stuffed reader over the bytes from ``start`` to the next marker."""
+    m = _MARKER.search(b, start)
+    end = m.start() if m else len(b)
+    return MsbReader(b[start:end].replace(b"\xff\x00", b"\xff"))
+
+
+def _stop_offset(r: MsbReader, start: int) -> int:
+    """Stream offset past the last byte ``r`` touched: the marker's place."""
+    used = (r.pos + 7) // 8
+    return start + used + r.data[:used].count(0xFF)
+
+
+def _decode_huffman(reader: MsbReader, table: dict) -> int:
     code = 0
     for length in range(1, 17):
         code = (code << 1) | reader.read_bit()
@@ -572,7 +517,8 @@ def parse_jpeg(b: bytes) -> tuple:
     mbx = (w + 8 * hmax - 1) // (8 * hmax)
     mby = (h + 8 * vmax - 1) // (8 * vmax)
     total_mcus = mbx * mby
-    reader = _BitReader(b, i)
+    start = i
+    reader = _read_interval(b, start)
     zz_idx = [r * 8 + c for (r, c) in ZIGZAG]
     cmat = _dct_matrix()
     preds = [0] * ns
@@ -586,7 +532,14 @@ def parse_jpeg(b: bytes) -> tuple:
     restart_count = 0
     for mcu in range(total_mcus):
         if dri and mcu and mcu % dri == 0:
-            reader.align_and_expect_rst(rst_idx)
+            j = _stop_offset(reader, start)
+            if b[j:j + 2] != bytes([0xFF, 0xD0 + rst_idx]):
+                raise ValueError(
+                    f"expected RST{rst_idx} at offset {j}, found "
+                    f"{b[j:j + 2].hex().upper()}"
+                )
+            start = j + 2
+            reader = _read_interval(b, start)
             rst_idx = (rst_idx + 1) % 8
             restart_count += 1
             preds = [0] * ns
@@ -601,7 +554,7 @@ def parse_jpeg(b: bytes) -> tuple:
             for v in range(vi):
                 for h_ in range(hi):
                     s = _decode_huffman(reader, dc_t)
-                    diff = _extend(reader.read_bits(s), s) if s else 0
+                    diff = _extend(reader.read(s), s) if s else 0
                     preds[ci] += diff
                     bi = (my * vi + v) * (mbx * hi) + (mx * hi + h_)
                     blk = coeffs[ci][bi]
@@ -621,15 +574,14 @@ def parse_jpeg(b: bytes) -> tuple:
                         if k > 63:
                             raise ValueError("AC index overflow")
                         blk[zz_idx[k]] = (
-                            _extend(reader.read_bits(size), size) * q[k]
+                            _extend(reader.read(size), size) * q[k]
                         )
                         k += 1
-    # after the scan: align and expect EOI (optional fill 0xFFs allowed)
-    reader.n = 0
-    j = reader.i
-    while j + 1 < len(b) and b[j] == 0xFF and b[j + 1] == 0xFF:
+    # after the scan: expect EOI (optional fill 0xFFs allowed)
+    j = _stop_offset(reader, start)
+    while b[j:j + 2] == b"\xff\xff":
         j += 1
-    if j + 1 >= len(b) or b[j] != 0xFF or b[j + 1] != 0xD9:
+    if b[j:j + 2] != b"\xff\xd9":
         raise ValueError("missing EOI after scan")
 
     planes = []

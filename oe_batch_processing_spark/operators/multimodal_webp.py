@@ -84,7 +84,8 @@ re-encodes the decoded raster and demands the exact original file bytes.
 
 Scale: per-document codec work in one mapInPandas after the standard
 bounded round-robin fan-out; a real corpus enters at the decode stage
-from a binaryFile scan of .webp blobs.
+from a binaryFile scan of .webp blobs. Bit I/O is the LSB-first pair of
+``functions/bitio.py`` (the decode hot paths inline its fields).
 """
 
 from __future__ import annotations
@@ -95,6 +96,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.functions.bitio import LsbReader, LsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -103,92 +105,6 @@ SIGNATURE = 0x2F
 CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 GREEN_ALPHABET = 256 + 24  # literals + length codes (cache symbols append)
 MAX_CODE_LEN = 15
-
-
-# --- LSB-first bit I/O (VP8L's bit order) --------------------------------------
-
-
-class LsbWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value: int, nbits: int) -> None:
-        """Little-endian field: lowest bit first."""
-        self.acc |= (value & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def put_code(self, code: int, nbits: int) -> None:
-        """Prefix-code bits go MSB-first into the LSB-first stream (the
-        DEFLATE convention RFC 9649 shares): the decoder consumes them one
-        at a time in stream order, extending code = code<<1 | bit. Writing
-        the bit-reversed code as ONE LSB-first field emits the identical
-        bit sequence in a single accumulator update."""
-        rev = 0
-        for _ in range(nbits):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.put(rev, nbits)
-
-    def flush(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
-class LsbReader:
-    """Buffered LSB-first reader: an int accumulator refilled bytewise
-    makes get/peek O(1) in the number of calls, not bits — the decoder's
-    hot path peeks a table-width window per symbol."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.byte_pos = 0
-        self.buf = 0
-        self.nbuf = 0
-        self.total_bits = 8 * len(data)
-        self.consumed = 0
-
-    @property
-    def pos(self) -> int:
-        return self.consumed
-
-    def _fill(self, need: int) -> None:
-        while self.nbuf < need and self.byte_pos < len(self.data):
-            self.buf |= self.data[self.byte_pos] << self.nbuf
-            self.byte_pos += 1
-            self.nbuf += 8
-
-    def get(self, nbits: int) -> int:
-        if self.consumed + nbits > self.total_bits:
-            raise ValueError("VP8L bitstream exhausted")
-        self._fill(nbits)
-        v = self.buf & ((1 << nbits) - 1)
-        self.buf >>= nbits
-        self.nbuf -= nbits
-        self.consumed += nbits
-        return v
-
-    def peek_lsb(self, nbits: int) -> int:
-        """Next nbits in stream order as an LSB-first integer, zero-padded
-        past end-of-stream; does not advance."""
-        self._fill(nbits)
-        return self.buf & ((1 << nbits) - 1)
-
-    def advance(self, nbits: int) -> None:
-        if self.consumed + nbits > self.total_bits:
-            raise ValueError("VP8L bitstream exhausted")
-        self._fill(nbits)
-        self.buf >>= nbits
-        self.nbuf -= nbits
-        self.consumed += nbits
 
 
 # --- canonical prefix codes ----------------------------------------------------
@@ -265,6 +181,17 @@ def canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
     return out
 
 
+def lsb_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """{symbol: (bit-reversed code, nbits)}: ``LsbWriter.put_code``
+    precomputed per symbol; a 1-symbol code costs zero bits."""
+    if len(lengths) < 2:
+        return {next(iter(lengths)): (0, 0)}
+    return {
+        s: (int(f"{c:0{nb}b}"[::-1], 2) if nb else 0, nb)
+        for s, (c, nb) in canonical_codes(lengths).items()
+    }
+
+
 class CanonicalDecoder:
     """Per-bit canonical decoding: first_code/count/symbol-offset per
     length — the classic O(bits) walk with no tables to mis-build."""
@@ -303,9 +230,7 @@ class CanonicalDecoder:
         self.table = None
         if self.maxlen <= 10:
             table = [None] * (1 << self.maxlen)
-            codes = canonical_codes(self.lengths)
-            for sym, (code, ln) in codes.items():
-                rev = int(f"{{:0{ln}b}}".format(code)[::-1], 2) if ln else 0
+            for sym, (rev, ln) in lsb_codes(self.lengths).items():
                 for k in range(1 << (self.maxlen - ln)):
                     table[rev | (k << ln)] = (sym, ln)
             self.table = table
@@ -841,10 +766,7 @@ def _write_mode_subimage(w: LsbWriter, modes) -> None:
     write_prefix_code(w, {255: 1}, 256)  # alpha: constant 255
     write_prefix_code(w, {0: 1}, 40)     # distance: unused
     if len(glen) > 1:
-        emit = {
-            s: (int(f"{{:0{nb}b}}".format(c)[::-1], 2) if nb else 0, nb)
-            for s, (c, nb) in canonical_codes(glen).items()
-        }
+        emit = lsb_codes(glen)
         for m in flat:
             rc, nb = emit[m]
             w.put(rc, nb)
@@ -918,15 +840,7 @@ def _write_argb_subimage(w: LsbWriter, pixels: list[tuple[int, int, int, int]]) 
     write_prefix_code(w, alen, 256)
     write_prefix_code(w, {0: 1}, 40)  # distance: present, unused
 
-    def emit(lengths: dict[int, int]):
-        if len(lengths) < 2:
-            return {next(iter(lengths)): (0, 0)}
-        return {
-            s: (int(f"{{:0{nb}b}}".format(c)[::-1], 2) if nb else 0, nb)
-            for s, (c, nb) in canonical_codes(lengths).items()
-        }
-
-    ge, re_, be, ae = emit(glen), emit(rlen), emit(blen), emit(alen)
+    ge, re_, be, ae = (lsb_codes(x) for x in (glen, rlen, blen, alen))
     for a, rr, g, bb in pixels:  # literal channel order: g, r, b, a
         for table, v in ((ge, g), (re_, rr), (be, bb), (ae, a)):
             code, nb = table[v]
@@ -1381,18 +1295,7 @@ def encode_webp_vp8l(
     write_prefix_code(w, {0 if predictor_applied else 255: 1}, 256)
     write_prefix_code(w, dlen, 40)
 
-    def emitter(lengths: dict[int, int]):
-        """symbol -> one LSB put of the bit-reversed canonical code (a
-        1-symbol code costs zero bits)."""
-        if len(lengths) < 2:
-            only = next(iter(lengths))
-            return {only: (0, 0)}
-        return {
-            s: (int(f"{{:0{nb}b}}".format(c)[::-1], 2) if nb else 0, nb)
-            for s, (c, nb) in canonical_codes(lengths).items()
-        }
-
-    grev, rbrev, drev = emitter(glen), emitter(rblen), emitter(dlen)
+    grev, rbrev, drev = lsb_codes(glen), lsb_codes(rblen), lsb_codes(dlen)
     # inlined LSB accumulator for the per-op emit loop: identical bit
     # stream to sequential put() calls (flush points never change the
     # emitted bytes), one method call per ~1.4k ops instead of 1-4 each
@@ -1495,15 +1398,7 @@ def encode_webp_vp8l_rgb(rgb: bytes, w_px: int, h_px: int) -> bytes:
     write_prefix_code(w, {255: 1}, 256)  # alpha: constant 255, zero bits
     write_prefix_code(w, {0: 1}, 40)     # distance: present, unused
 
-    def emitter(lengths: dict[int, int]):
-        if len(lengths) < 2:
-            return {next(iter(lengths)): (0, 0)}
-        return {
-            s: (int(f"{{:0{nb}b}}".format(c)[::-1], 2) if nb else 0, nb)
-            for s, (c, nb) in canonical_codes(lengths).items()
-        }
-
-    ge, re_, be = emitter(glen), emitter(rlen), emitter(blen)
+    ge, re_, be = lsb_codes(glen), lsb_codes(rlen), lsb_codes(blen)
     # Vectorized variable-length LSB emit (r15): the per-pixel loop (3
     # dict hits + accumulator shifts per pixel) is replaced by array
     # bit-packing that produces the IDENTICAL bit stream — every field's

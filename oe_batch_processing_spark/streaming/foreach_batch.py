@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import scoped_conf
 from oe_batch_processing_spark.tables import load_table
 
 
@@ -218,13 +219,12 @@ def stream_split_leakage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches are FILE-sized (1/4 of the held split), so PER-BATCH
     # shuffles at the session-wide partition count pay ~4x task-dispatch
     # overhead for no parallelism — the STREAMING phase runs at a
-    # batch-sized partition count (set just before start(), restored in
-    # the finally; the static index build keeps the session width — its
+    # batch-sized partition count (scoped to the streaming run; the
+    # static index build keeps the session width — its
     # per-doc shingle transform is the one stage here that wants all
     # cores). Scratch (checkpoint + source files) goes to /dev/shm when
     # present: the availableNow demo doesn't need durable checkpoints, a
     # production gate would point this at object storage.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
     root = None
     try:
         # frozen history structures, built once and persisted across batches
@@ -338,14 +338,14 @@ def stream_split_leakage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # batch-sized shuffle width for the micro-batch jobs only (the
         # tsh join still aligns to the index's cached partitioning)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            (
+                stream.writeStream.foreachBatch(gate)
+                .option("checkpointLocation", os.path.join(root, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
         assert screened["batches"] >= 4, "expected at least four micro-batches"
 
         final = (
@@ -382,7 +382,6 @@ def stream_split_leakage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # not just disk, across repeated runs)
         if root is not None:
             shutil.rmtree(root, ignore_errors=True)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 @query(
@@ -430,7 +429,6 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(_SPLIT_BYTE) % 10
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
     root = None
     try:
         # --- frozen model, built once and persisted across batches ---
@@ -534,14 +532,14 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         # batch-sized shuffle width for the micro-batch jobs only
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            (
+                stream.writeStream.foreachBatch(score)
+                .option("checkpointLocation", os.path.join(root, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
         assert seen["batches"] >= 4, "expected at least four micro-batches"
 
         final = spark.read.parquet(out_path)
@@ -560,7 +558,6 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         if root is not None:
             shutil.rmtree(root, ignore_errors=True)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 stream_quality_classifier.__doc__ = stream_quality_classifier.__doc__.format(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -12,7 +13,7 @@ def run_cli(*args):
         [sys.executable, "-m", "oe_batch_processing_spark.cli", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=180,
     )
 

@@ -3,9 +3,15 @@ detect every class of divergence (otherwise green runs prove nothing)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 
 from oe_batch_processing_spark.testing import compare
+
+ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"
+)
 
 
 def test_compare_equal_is_none():
@@ -49,7 +55,7 @@ def test_driver_window_is_priority_ordered():
     from oe_batch_processing_spark import registry
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", ENTRY
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -68,7 +74,7 @@ def test_driver_window_has_no_array_columns(spark, sf_dir):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", ENTRY
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

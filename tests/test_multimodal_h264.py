@@ -10,17 +10,22 @@ from __future__ import annotations
 
 import pytest
 
+from oe_batch_processing_spark.functions.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.operators.multimodal_h264 import (
     MB_BYTES,
-    BitReader,
-    BitWriter,
     _mb_samples,
     add_emulation,
+    check_trailing,
     decode_h264_ipcm,
     encode_sps,
     mux_annexb,
+    read_se,
+    read_ue,
     split_annexb,
     strip_emulation,
+    write_se,
+    write_trailing,
+    write_ue,
 )
 
 
@@ -36,27 +41,26 @@ def _stream(mb_w: int = 2, n_frames: int = 3, zero_head: bool = True) -> bytes:
 
 
 def test_exp_golomb_roundtrip():
-    w = BitWriter()
+    w = MsbWriter()
     vals = [0, 1, 2, 3, 7, 25, 255, 2**16]
     for v in vals:
-        w.ue(v)
+        write_ue(w, v)
     svals = [0, 1, -1, 2, -2, 26, -26]
     for v in svals:
-        w.se(v)
-    r = BitReader(w.trailing())
-    assert [r.ue() for _ in vals] == vals
-    assert [r.se() for _ in svals] == svals
-    r.trailing()
+        write_se(w, v)
+    r = MsbReader(write_trailing(w))
+    assert [read_ue(r) for _ in vals] == vals
+    assert [read_se(r) for _ in svals] == svals
+    check_trailing(r)
 
 
 def test_ue_known_vectors():
     # spec table 9-1: 0 -> '1', 1 -> '010', 2 -> '011', 3 -> '00100'
     for v, bits in [(0, "1"), (1, "010"), (2, "011"), (3, "00100"),
                     (25, "000011010")]:
-        w = BitWriter()
-        w.ue(v)
-        w.align_zero()
-        got = "".join(f"{b:08b}" for b in w.buf)[: len(bits)]
+        w = MsbWriter()
+        write_ue(w, v)
+        got = "".join(f"{b:08b}" for b in w.finish())[: len(bits)]
         assert got == bits, (v, got, bits)
 
 

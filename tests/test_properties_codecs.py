@@ -9,9 +9,16 @@ bit/byte bugs actually live.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from oe_batch_processing_spark.functions.bitio import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    MsbWriter,
+)
 from oe_batch_processing_spark.operators.multimodal_h264 import (
     add_emulation,
     decode_h264_ipcm,
@@ -26,9 +33,14 @@ from oe_batch_processing_spark.operators.multimodal_tiff import (
     packbits_encode_row,
     parse_tiff,
 )
+from oe_batch_processing_spark.operators.multimodal_jpeg import (
+    _read_interval,
+    _stop_offset,
+    _stuffed_interval,
+    encode_jpeg,
+    parse_jpeg,
+)
 from oe_batch_processing_spark.operators.multimodal_webp import (
-    LsbReader,
-    LsbWriter,
     encode_webp_vp8l,
     lz77_parse,
     parse_webp_vp8l,
@@ -44,6 +56,132 @@ _runs = st.lists(
 ).map(lambda ps: b"".join(bytes([v]) * n for v, n in ps))
 _noise = st.binary(max_size=300)
 _bytestream = st.one_of(_runs, _noise)
+
+# (value, width) fields for the shared bit I/O; width 0 is a legal no-op
+_fields = st.lists(
+    st.integers(0, 32).flatmap(
+        lambda w: st.tuples(st.integers(0, (1 << w) - 1), st.just(w))
+    ),
+    max_size=60,
+)
+
+
+@given(_fields)
+@settings(max_examples=200, deadline=None)
+def test_lsb_bitio_roundtrips_any_fields(fields):
+    w = LsbWriter()
+    for v, n in fields:
+        w.put(v, n)
+        w.put_code(v, n)
+    r = LsbReader(w.flush())
+    for v, n in fields:
+        assert r.peek_lsb(n) == r.get(n) == v
+        code = 0
+        for _ in range(n):  # put_code: MSB-first in stream order
+            code = (code << 1) | r.get(1)
+        assert code == v
+    assert r.pos == 2 * sum(n for _, n in fields)
+
+
+@given(_fields, st.booleans())
+@settings(max_examples=200, deadline=None)
+def test_msb_bitio_roundtrips_any_fields(fields, fill_bit):
+    w = MsbWriter()
+    for v, n in fields:
+        w.write(v, n)
+    nbits = sum(n for _, n in fields)
+    assert w.bits_written() == nbits
+    w.align(fill_bit)
+    w.write(0xA5C3, 16)
+    data = w.finish()
+    assert len(data) == (nbits + 7) // 8 + 2
+    r = MsbReader(data)
+    for i, (v, n) in enumerate(fields):
+        if i % 2:
+            assert r.read(n) == v
+        else:
+            got = 0
+            for _ in range(n):
+                got = (got << 1) | r.read_bit()
+            assert got == v
+    assert r.pos == nbits
+    pad = -nbits % 8
+    assert r.read(pad) == ((1 << pad) - 1 if fill_bit else 0)
+    assert r.read_bytes(2) == b"\xa5\xc3"
+
+
+def test_bitio_readers_raise_past_the_data():
+    def exhausted(fn, *args):
+        with pytest.raises(ValueError, match="bitstream exhausted"):
+            fn(*args)
+
+    for data in (b"", b"\x5a", b"\x5a\xff"):
+        n = 8 * len(data)
+        r = LsbReader(data)
+        exhausted(r.get, n + 1)
+        exhausted(r.advance, n + 1)
+        r.get(n)
+        exhausted(r.get, 1)
+        exhausted(r.advance, 1)
+        r = MsbReader(data)
+        exhausted(r.read, n + 1)
+        exhausted(r.read_bytes, len(data) + 1)
+        r.read(n)
+        exhausted(r.read, 1)
+        exhausted(r.read_bit)
+        exhausted(r.read_bytes, 1)
+
+
+@given(st.lists(_fields, min_size=1, max_size=6))
+@settings(max_examples=150, deadline=None)
+def test_jpeg_entropy_intervals_roundtrip(intervals):
+    """Restart intervals stuffed on write, split at the next marker and
+    un-stuffed on read: every field comes back and every RSTn is found
+    where the interval's last byte ends. Each interval carries an 0xFFFF
+    field, so stuffing is exercised on every example."""
+    seg = bytearray()
+    for k, fields in enumerate(intervals):
+        w = MsbWriter()
+        for v, n in fields + [(0xFFFF, 16)]:
+            w.write(v, n)
+        seg += _stuffed_interval(w)
+        seg += bytes([0xFF, 0xD0 + k % 8]) if k + 1 < len(intervals) else b"\xff\xd9"
+    assert b"\xff\x00" in seg
+    start = 0
+    for k, fields in enumerate(intervals):
+        r = _read_interval(bytes(seg), start)
+        assert [r.read(n) for _, n in fields + [(0, 16)]] == [
+            v for v, _ in fields + [(0xFFFF, 16)]
+        ]
+        j = _stop_offset(r, start)
+        marker = 0xD0 + k % 8 if k + 1 < len(intervals) else 0xD9
+        assert seg[j:j + 2] == bytes([0xFF, marker])
+        start = j + 2
+    assert start == len(seg)
+
+
+_RST_JPEG = encode_jpeg(bytes(range(256)) * 12, 48, 64, 1, restart_interval=2)
+
+
+@given(st.data())
+@settings(max_examples=60, deadline=None)
+def test_jpeg_marker_inside_an_interval_raises(data):
+    """Any marker spliced strictly inside a restart interval cuts it short:
+    the decode runs out of bits or misses the expected RSTn."""
+    sos = _RST_JPEG.index(b"\xff\xda")
+    start = sos + 2 + int.from_bytes(_RST_JPEG[sos + 2:sos + 4], "big")
+    rsts = [
+        i for i in range(start, len(_RST_JPEG) - 1)
+        if _RST_JPEG[i] == 0xFF and 0xD0 <= _RST_JPEG[i + 1] <= 0xD7
+    ]
+    assert rsts
+    bounds = list(zip([start] + [i + 2 for i in rsts], rsts))
+    lo, hi = data.draw(st.sampled_from(bounds))
+    at = data.draw(st.integers(lo, hi - 1))
+    marker = data.draw(st.sampled_from([0xD0, 0xD7, 0xC4, 0xD9, 0xFE]))
+    bad = _RST_JPEG[:at] + bytes([0xFF, marker]) + _RST_JPEG[at:]
+    with pytest.raises(ValueError):
+        parse_jpeg(bad)
 
 
 @given(_bytestream)

@@ -65,3 +65,50 @@ def test_theta_overlap_matches_exact_within_tolerance(spark):
         exact_d = len(users[r["type_a"]] - users[r["type_b"]])
         assert abs(r["overlap_est"] - exact_i) <= max(2, REL_TOL * exact_i), r
         assert abs(r["only_a_est"] - exact_d) <= max(2, REL_TOL * exact_d), r
+
+
+def test_approx_count_distinct_within_three_rsd(spark):
+    """HLL++ at rsd=0.01: every priority's estimate is within 3 x rsd of
+    the exact per-priority distinct customer count."""
+    rsd = 0.01
+    est = {
+        r["o_orderpriority"]: r["approx_customers"]
+        for r in registry.QUERIES["agg_approx_count_distinct"](
+            spark, SF_DIR
+        ).collect()
+    }
+    exact = {
+        r["o_orderpriority"]: r["n"]
+        for r in load_table(spark, SF_DIR, "orders")
+        .groupBy("o_orderpriority")
+        .agg(F.countDistinct("o_custkey").alias("n"))
+        .collect()
+    }
+    assert set(est) == set(exact)
+    for k, n in exact.items():
+        assert abs(est[k] - n) <= 3 * rsd * n, (k, est[k], n)
+
+
+def test_stratified_sample_sizes_and_determinism(spark):
+    """Strata at fraction 1.0 keep every row; the Bernoulli strata land
+    within 4 sigma of n * p; the fixed seed makes reruns identical."""
+    fractions = {"en": 0.5, "de": 1.0, "es": 1.0, "fr": 1.0, "zh": 0.25}
+    run = registry.QUERIES["sample_stratified_documents"]
+    first = sorted(tuple(r) for r in run(spark, SF_DIR).collect())
+    assert sorted(tuple(r) for r in run(spark, SF_DIR).collect()) == first
+    got = dict(first)
+    exact = {
+        r["lang"]: r["n"]
+        for r in load_table(spark, SF_DIR, "documents")
+        .groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert set(got) <= set(fractions)
+    for lang, p in fractions.items():
+        n = exact[lang]
+        if p == 1.0:
+            assert got[lang] == n, lang
+        else:
+            sigma = (n * p * (1 - p)) ** 0.5
+            assert abs(got.get(lang, 0) - n * p) <= 4 * sigma, (lang, got, n)

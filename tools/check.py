@@ -13,10 +13,12 @@ remedy if a larger-SF gate ever appears.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry

@@ -17,10 +17,12 @@ tools/bench_table.py for perf claims.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry
