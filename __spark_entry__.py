@@ -27,13 +27,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so the
-    queries that most need a correctness row this round come first (the
-    driver checks a registration-order prefix; registry.DRIVER_CHECK_PRIORITY)."""
-    return registry.driver_ordered(dict(registry.QUERIES))
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for every SQL-expressible query; omitted keys
     get the driver's weaker rows-only check (approximate/streaming ops)."""
-    return registry.driver_ordered(dict(registry.ORACLE))
+    return dict(registry.ORACLE)

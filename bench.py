@@ -1,16 +1,21 @@
 """Benchmark runner — the driver's per-round feedback loop.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line: ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name:
-sec}, "sf": ...}``, followed by a compact one-object summary line (no
-per-query map) so a bounded tail capture of stdout always ends with one
-complete parseable JSON object — the 68-entry full line outgrew the driver's
-tail window in round 6 and its artifact recorded ``"parsed": null``.
+Usage:
+    python bench.py [--repeat N] [--action {count,noop}] [query_name ...]
 
-Each query is executed with a full action (count via noop write would be
-ideal; ``toPandas`` would measure arrow transfer — we use ``count`` on the
-final frame which forces full execution of every operator upstream).
+Runs the headline queries (or the named ones) at ``$SPARK_GRAFT_SF_DIR``
+(default ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints
+ONE JSON line: ``{"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...}``, followed by a compact one-object
+summary line (no per-query map) so a bounded tail capture of stdout always
+ends with one complete parseable JSON object — the 68-entry full line
+outgrew the driver's tail window in round 6 and its artifact recorded
+``"parsed": null``. The two 100k-row ingest rows run only with the default
+headline set.
+
+Each query runs through ``testing.time_query``: ``count`` on the final frame
+forces every operator upstream; ``--action noop`` times a noop-format write
+(every column of every row computed, not an optimizer-pruned count).
 
 Measurement protocol (round 6, after the r5 cold-JIT findings):
   - Before timing, each query runs ONCE at sf0.001 (``$SPARK_GRAFT_WARM_DIR``)
@@ -21,6 +26,10 @@ Measurement protocol (round 6, after the r5 cold-JIT findings):
     reported number the data-proportional steady-state cost, which is the
     quantity that extrapolates to a 100 TB run (where one JIT compile
     amortizes over hours, not over a 1-second query).
+  - The session's cache is cleared before every timed run, so repeat 2..N of
+    a query that caches (LPA adjacency, minhash fingerprints, ...) pays its
+    own cache build — the r6 ``graph_label_propagation`` gap (committed
+    median 1.67 s vs driver 9.4 s) was repeats reusing repeat 1's cache.
   - ``--repeat N`` (N>=3 for the committed protocol table) times each query
     N times and reports the per-query MEDIAN in ``queries`` plus
     ``[min, max]`` spread in ``spread``. The default single-timed run is what
@@ -31,6 +40,7 @@ Measurement protocol (round 6, after the r5 cold-JIT findings):
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -42,6 +52,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry
 from oe_batch_processing_spark.session import get_spark
+from oe_batch_processing_spark.testing import time_query, warm_session
 
 # Headline set: one per operator family, weighted toward the expensive paths
 # (fact-fact joins, windows over the full fact table, dedup/similarity).
@@ -251,28 +262,19 @@ def bench_ingest(spark, timings: dict[str, float]) -> None:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*", help="queries to time (default: HEADLINE)")
+    ap.add_argument("--repeat", type=int, default=1)
+    ap.add_argument("--action", choices=("count", "noop"), default="count")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    repeat = 1
-    if "--repeat" in sys.argv:
-        repeat = max(1, int(sys.argv[sys.argv.index("--repeat") + 1]))
+    repeat = max(1, args.repeat)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
     spark = get_spark("bench")
-    # Warm the JVM, codegen and parquet footers with one cheap pass over
-    # every table so per-query timings measure the queries, not first-touch
-    # session/scan setup.
-    spark.range(1).count()
-    from oe_batch_processing_spark.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).count()
-    # spin up Python/Arrow workers once so Pandas-UDF queries measure the
-    # operator, not worker startup
-    spark.range(0, 1000, 1, 8).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
+    warm_session(spark, sf_dir)
 
     # Failure isolation: one broken query must not sink the round's entire
     # bench signal (round 4 lost all numbers to a single AnalysisException).
@@ -283,40 +285,20 @@ def main() -> None:
     warmup_errors: dict[str, str] = {}
     do_warm = bool(warm_dir) and os.path.isdir(warm_dir) and warm_dir != sf_dir
     total = 0.0
-    for name in HEADLINE:
-        fn = registry.QUERIES.get(name)
-        if fn is None:
+    for name in args.names or HEADLINE:
+        if name not in registry.QUERIES:
             errors[name] = "not registered"
             continue
-        # JIT warmup: one pass at the tiny SF compiles this query's
-        # generated code (whole-stage codegen + higher-order-function
-        # expression compilation) so the timed run measures steady-state,
-        # data-proportional cost — see module docstring.
-        if do_warm:
-            try:
-                fn(spark, warm_dir).count()
-            except Exception as exc:  # noqa: BLE001 — warmup is best-effort,
-                # but a query that only warms up at the real SF is being timed
-                # COLD, which skews the protocol numbers — record the fact.
-                warmup_errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        runs: list[float] = []
-        try:
-            for _ in range(repeat):
-                # Each timed run pays its own internal persist()/cache build:
-                # without this, repeat 2..N of a query that caches (LPA
-                # adjacency, minhash fingerprints, ...) reuses repeat 1's
-                # cache and the reported MEDIAN measures a quantity the
-                # driver's repeat-1 protocol can never reproduce — exactly
-                # the r6 graph_label_propagation gap (committed median
-                # 1.67 s vs driver 9.4 s). Cache build is data-proportional
-                # work; the number of record must include it.
-                spark.catalog.clearCache()
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                runs.append(time.time() - t0)
-        except Exception as exc:  # noqa: BLE001 — record and keep benching
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+        run = time_query(spark, name, sf_dir, repeat=repeat, action=args.action,
+                         warm_dir=warm_dir if do_warm else None)
+        if run.warmup_error:
+            # a query that only warms up at the real SF is being timed
+            # COLD, which skews the protocol numbers — record the fact
+            warmup_errors[name] = run.warmup_error[:200]
+        if run.error:
+            errors[name] = run.error[:300]
             continue
+        runs = run.walls
         if name in CONTENTION_SENSITIVE and repeat > 1:
             dt = min(runs)  # declared contention-sensitive: honest floor
         else:
@@ -326,13 +308,15 @@ def main() -> None:
             spread[name] = [round(min(runs), 3), round(max(runs), 3)]
         total += dt
 
-    try:
-        bench_ingest(spark, timings)
-        total += (
-            timings["ingest_csv_100k_fidelity"] + timings["ingest_csv_100k_native"]
-        )
-    except Exception as exc:  # noqa: BLE001
-        errors["ingest"] = f"{type(exc).__name__}: {exc}"[:300]
+    if not args.names:
+        try:
+            bench_ingest(spark, timings)
+            total += (
+                timings["ingest_csv_100k_fidelity"]
+                + timings["ingest_csv_100k_native"]
+            )
+        except Exception as exc:  # noqa: BLE001
+            errors["ingest"] = f"{type(exc).__name__}: {exc}"[:300]
 
     out = {
         "metric": "headline_query_wall_time",
@@ -347,6 +331,8 @@ def main() -> None:
             "contention_sensitive_min": sorted(CONTENTION_SENSITIVE),
         },
     }
+    if args.action != "count":
+        out["protocol"]["action"] = args.action
     if warmup_errors:
         out["protocol"]["warmup_errors"] = warmup_errors
     if spread:

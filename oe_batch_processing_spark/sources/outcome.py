@@ -76,46 +76,3 @@ def route_native(scanned: DataFrame, corrupt_col: str = "_corrupt_record") -> Ro
         F.when(F.col(corrupt_col).isNotNull(), F.lit("Malformed CSV record")),
     )
     return route(parsed)
-
-
-def route_observed(parsed: DataFrame):
-    """Like :func:`route`, but the run counters ride along as an
-    ``Observation`` (Spark's accumulator-backed query metrics): the
-    total/success/failure counts materialize as a side effect of whatever
-    action consumes the channels — e.g. the sink write — instead of the
-    separate aggregation pass ``RoutedRecords.counts()`` runs. At scale
-    that second pass re-reads the whole parse output; this is free.
-
-    Returns ``(RoutedRecords, Observation)``; read the dict with
-    :func:`observed_counts` AFTER an action has run over a channel.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("outcome_counts")
-    non_ignored = parsed.filter(F.col("statusText") != IGNORED).observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("statusText") == SUCCESS, 1).otherwise(0)).alias(
-            "success"
-        ),
-        F.sum(F.when(F.col("statusText") == FAILED, 1).otherwise(0)).alias(
-            "failure"
-        ),
-    )
-    routed = RoutedRecords(
-        success=non_ignored.filter(F.col("statusText") == SUCCESS),
-        failed=non_ignored.filter(F.col("statusText") == FAILED),
-        non_ignored=non_ignored,
-    )
-    return routed, obs
-
-
-def observed_counts(obs) -> dict[str, int]:
-    """BatchRun-shaped counters from a fired Observation (same keys as
-    ``RoutedRecords.counts()``, reference O12 semantics)."""
-    got = obs.get
-    return {
-        "totalRecordCount": got["total"],
-        "successCount": got["success"] or 0,
-        "failureCount": got["failure"] or 0,
-    }

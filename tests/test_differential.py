@@ -7,7 +7,7 @@ import pytest
 
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry
-from oe_batch_processing_spark.testing import compare, duckdb_connection
+from oe_batch_processing_spark.testing import check_query, duckdb_connection
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,12 +21,6 @@ def oracle_con():
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
-    spdf = registry.QUERIES[name](spark, sf_dir).toPandas()
-    sql = registry.ORACLE.get(name)
-    if sql is None:
-        # rows-only contract: must run and produce a stable, well-formed frame
-        assert spdf is not None
-        return
-    odf = oracle_con.execute(sql).fetchdf()
-    mismatch = compare(spdf, odf)
+    # rows-only queries (no oracle) must still build and collect
+    mismatch = check_query(spark, oracle_con, name, sf_dir).mismatch
     assert mismatch is None, f"{name}: {mismatch}"

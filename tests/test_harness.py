@@ -1,13 +1,22 @@
-"""Mutation tests for the differential harness itself: the comparator must
-detect every class of divergence (otherwise green runs prove nothing)."""
+"""Tests for the query-run harness itself: the comparator must detect every
+class of divergence (otherwise green runs prove nothing), and the runners
+must record, time and release what they run."""
 
 from __future__ import annotations
 
 import os
 
 import pandas as pd
+import pytest
 
-from oe_batch_processing_spark.testing import compare
+import oe_batch_processing_spark.operators  # noqa: F401
+from oe_batch_processing_spark import registry
+from oe_batch_processing_spark.testing import (
+    check_query,
+    compare,
+    duckdb_connection,
+    time_query,
+)
 
 ENTRY = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"
@@ -46,26 +55,6 @@ def test_compare_handles_nulls_and_nan():
     assert compare(a, c) is not None
 
 
-def test_driver_window_is_priority_ordered():
-    """The driver checks a ~50-query registration-order prefix; the window
-    must be exactly the curated priority list, fully oracle-bearing except
-    the declared approximates."""
-    import importlib.util
-
-    from oe_batch_processing_spark import registry
-
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", ENTRY
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    names = list(mod.queries())
-    prio = list(registry.DRIVER_CHECK_PRIORITY)
-    assert names[: len(prio)] == prio
-    missing = [n for n in prio if n not in registry.QUERIES]
-    assert not missing, f"priority names not registered: {missing}"
-
-
 def test_driver_window_has_no_array_columns(spark, sf_dir):
     """Round-1 lesson: the driver's value-hasher crashes on array/map
     output columns. Nothing in the checked window may emit one. (Streaming
@@ -89,3 +78,53 @@ def test_driver_window_has_no_array_columns(spark, sf_dir):
             if "Array" in t or "Map" in t:
                 offenders.append((name, f.name, t))
     assert not offenders, f"array/map columns in driver window: {offenders}"
+
+
+@pytest.mark.parametrize("action", ["count", "noop"])
+def test_time_query_returns_one_wall_per_repeat(spark, sf_dir, action):
+    run = time_query(
+        spark, "q6_forecast_revenue", sf_dir, repeat=3, action=action
+    )
+    assert run.error is None and run.warmup_error is None
+    assert len(run.walls) == 3 and all(w > 0 for w in run.walls)
+    assert run.df is not None
+    assert run.rows == (1 if action == "count" else None)
+
+
+def test_time_query_records_errors(spark, sf_dir, monkeypatch):
+    def broken(spark, sf_dir):
+        raise RuntimeError(f"cannot build at {sf_dir}")
+
+    monkeypatch.setitem(registry.QUERIES, "broken_query", broken)
+    run = time_query(
+        spark, "broken_query", sf_dir, repeat=3, warm_dir="/warm"
+    )
+    assert run.warmup_error == "RuntimeError: cannot build at /warm"
+    assert run.error == f"RuntimeError: cannot build at {sf_dir}"
+    assert run.walls == [] and run.rows is None
+
+
+def test_check_query_reports_wrong_oracle(spark, sf_dir):
+    """An oracle over other data (sf0.01 instead of sf0.001) must not pass."""
+    con = duckdb_connection(os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    try:
+        res = check_query(spark, con, "q1_pricing_summary", sf_dir)
+    finally:
+        con.close()
+    assert res.mismatch is not None and "differ" in res.mismatch
+    assert res.rows > 0 and res.wall_s > 0
+
+
+def test_check_query_releases_persisted_frames(spark, sf_dir):
+    """pipeline_split_leakage_report persists its keyed shingle index and
+    returns a lazy frame that cannot release it; the harness must."""
+    con = duckdb_connection(sf_dir)
+    # frames cached by earlier tests would be released too and lower the count
+    spark.catalog.clearCache()
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    try:
+        res = check_query(spark, con, "pipeline_split_leakage_report", sf_dir)
+    finally:
+        con.close()
+    assert res.mismatch is None
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

@@ -158,33 +158,6 @@ def test_cdc_latest_state_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in formatted_plan(df)
 
 
-def test_route_observed_counts_match_aggregation_pass(spark, tmp_path):
-    """The Observation-backed counters (zero extra pass — they fire as a
-    side effect of the sink write) must equal the classic counts()
-    aggregation, including the IGNORED exclusion (reference O12/O7)."""
-    from pyspark.sql import functions as F
-
-    from oe_batch_processing_spark.sources import outcome
-
-    parsed = spark.range(100).select(
-        F.col("id").alias("recId"),
-        F.when(F.col("id") % 10 == 0, outcome.IGNORED)
-        .when(F.col("id") % 3 == 0, outcome.FAILED)
-        .otherwise(outcome.SUCCESS)
-        .alias("statusText"),
-    )
-    routed, obs = outcome.route_observed(parsed)
-    # the sink write is the only action — counters fire as its side effect
-    routed.non_ignored.write.mode("overwrite").parquet(
-        str(tmp_path / "sink.parquet")
-    )
-    got = outcome.observed_counts(obs)
-    assert got == outcome.route(parsed).counts()
-    assert got["totalRecordCount"] == 90  # IGNORED rows never counted
-    assert got["successCount"] == 60
-    assert got["failureCount"] == 30
-
-
 def test_bucketized_range_join_has_no_nested_loop(spark):
     """join_range_pure_bucketized exists to AVOID the BroadcastNestedLoop
     plan a no-equi-key range join otherwise gets: the cell equi-key must

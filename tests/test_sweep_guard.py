@@ -122,64 +122,6 @@ def test_rows_only_set_matches_registry():
     )
 
 
-def test_driver_window_names_are_registered():
-    """VERDICT r7 item 7: a rename would silently shrink the driver window.
-    Every DRIVER_CHECK_PRIORITY name must resolve in the registry, the
-    window must be exactly 50 unique names (the driver checks a 50-prefix),
-    and every name must also carry an oracle or be a declared rows-only
-    approximate (a window slot without at least a rows-only check row is
-    wasted)."""
-    w = registry.DRIVER_CHECK_PRIORITY
-    assert len(w) == 50 and len(set(w)) == 50, (
-        f"driver window must be 50 unique names, got {len(w)} "
-        f"({len(set(w))} unique)"
-    )
-    unknown = [n for n in w if n not in registry.QUERIES]
-    assert not unknown, f"driver-window names missing from registry: {unknown}"
-    # ADVICE r8: the docstring promised this but the body never checked it.
-    unchecked = [n for n in w if n not in registry.ORACLE and n not in ROWS_ONLY]
-    assert not unchecked, (
-        f"driver-window names with neither an oracle nor a declared "
-        f"rows-only approximate status: {unchecked}"
-    )
-
-
-def test_driver_window_rotation_not_forgotten():
-    """ADVICE r14: names rotated OUT of the 50-slot window to make room
-    for a round's re-checks lost driver coverage with the deferral
-    tracked only in a comment. The deferral is now machine-readable
-    (registry.DRIVER_CHECK_DEFERRED): every deferred name must be
-    registered and NOT in the current window (else it isn't deferred),
-    and the names the round-14 window deferred must be back in the
-    round-15 window — the per-round pin that makes forgetting the
-    re-insertion a test failure (update alongside the rotation)."""
-    d = registry.DRIVER_CHECK_DEFERRED
-    assert len(set(d)) == len(d)
-    unknown = [n for n in d if n not in registry.QUERIES]
-    assert not unknown, f"deferred names missing from registry: {unknown}"
-    overlap = set(d) & set(registry.DRIVER_CHECK_PRIORITY)
-    assert not overlap, f"deferred names still in the window: {sorted(overlap)}"
-    # the r16 deferrals, owed to (and pinned in) the r17 window:
-    r16_deferred = {
-        "set_union_by_name",
-        "sql_pipe_revenue_by_flag",
-        "stats_anova_oneway",
-        "stats_corr_regression",
-        "stats_equidepth_bins",
-        "stats_rank_correlation_battery",
-        "stream_forecast_croston",
-        "stream_periodogram_goertzel",
-        "text_lexical_mattr",
-        "users_churn_labels",
-        "win_percent_of_total",
-    }
-    missing = r16_deferred - set(registry.DRIVER_CHECK_PRIORITY)
-    assert not missing, (
-        f"r16-deferred names not re-inserted in the r17 window: "
-        f"{sorted(missing)}"
-    )
-
-
 def test_bench_headline_names_are_registered():
     """VERDICT r7 item 7 (second half): a rename would silently drop a
     bench row. Parse bench.py's HEADLINE literal and resolve every name."""

@@ -1,4 +1,5 @@
-"""Local differential checker — mirrors the driver's DuckDB-oracle harness.
+"""Local differential checker — mirrors the driver's DuckDB-oracle harness
+(each query runs through ``testing.check_query``).
 
 Usage:
     python tools/check.py [sf_dir] [query_name ...]
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
@@ -23,7 +23,7 @@ sys.path.insert(0, REPO_ROOT)
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry
 from oe_batch_processing_spark.session import get_spark
-from oe_batch_processing_spark.testing import compare, duckdb_connection
+from oe_batch_processing_spark.testing import check_query, duckdb_connection
 
 
 def main() -> int:
@@ -38,36 +38,25 @@ def main() -> int:
 
     n_fail = 0
     for name in names:
-        t0 = time.time()
         try:
-            spdf = registry.QUERIES[name](spark, sf_dir).toPandas()
+            res = check_query(spark, con, name, sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
-        dt = time.time() - t0
-        sql = registry.ORACLE.get(name)
-        if sql is None:
-            print(f"ok   {name}: rows-only, {len(spdf)} rows ({dt:.1f}s)")
-            continue
-        try:
-            odf = con.execute(sql).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: oracle error: {e}")
+        if res.mismatch:
+            print(f"FAIL {name}: {res.mismatch}")
             n_fail += 1
-            continue
-        mismatch = compare(spdf, odf)
-        if mismatch:
-            print(f"FAIL {name}: {mismatch}")
-            n_fail += 1
-        elif len(spdf) == 0:
+        elif name not in registry.ORACLE:
+            print(f"ok   {name}: rows-only, {res.rows} rows ({res.wall_s:.1f}s)")
+        elif res.rows == 0:
             # 0 == 0 proves nothing: any bug that yields an empty frame
             # would "pass" (round-6 verdict: the m=2^16 bloom prefilter
             # did exactly that). Mark it so the sweep guard can demand an
             # explicit allowlist justification.
-            print(f"PASS {name}: 0 rows (VACUOUS) ({dt:.1f}s)")
+            print(f"PASS {name}: 0 rows (VACUOUS) ({res.wall_s:.1f}s)")
         else:
-            print(f"PASS {name}: {len(spdf)} rows ({dt:.1f}s)")
+            print(f"PASS {name}: {res.rows} rows ({res.wall_s:.1f}s)")
     print(f"\n{len(names) - n_fail}/{len(names)} passed")
     return 1 if n_fail else 0
 

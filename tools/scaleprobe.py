@@ -13,9 +13,10 @@ were plan-level arguments. This tool turns them into measurements:
    so the dedup probes run in the adversarial-duplicates regime (their
    OUTPUT therefore grows faster than N; the artifact records output rows so
    time ratios can be read against row ratios).
-2. **Run** the probe queries at 1x (sf0.1 itself) and Nx, repeat-K minimum
-   wall time per (query, scale), ``spark.catalog.clearCache()`` before every
-   timed run, the same ``.count()`` action bench.py uses.
+2. **Run** the probe queries at 1x (sf0.1 itself) and Nx through
+   ``testing.time_query`` (the harness bench.py uses): repeat-K minimum
+   wall time per (query, scale), cache cleared before every timed run, the
+   ``.count()`` action.
 3. **Audit plans**: count ``Exchange SinglePartition`` occurrences in the
    executed plan at both scales — a query that gains single-partition
    exchanges at 10x has a scale bug regardless of its wall time. (Streaming
@@ -49,8 +50,10 @@ import oe_batch_processing_spark.streaming  # noqa: F401
 from oe_batch_processing_spark import registry
 from oe_batch_processing_spark.session import get_spark
 from oe_batch_processing_spark.tables import TABLE_NAMES, load_table
+from oe_batch_processing_spark.testing import time_query
 
 BASE_DIR = "/root/testdata/sf0.1"
+WARM_DIR = os.path.join(os.path.dirname(BASE_DIR), "sf0.01")
 DATA_DIR = os.path.join(REPO_ROOT, "scaleprobe_data")
 KEY_OFFSET = 1_000_000_000  # far above any sf0.1 key; BIGINT-safe at r<=99
 
@@ -239,33 +242,26 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def run_probe(spark, names, sf_dir: str, repeat: int):
-    """Repeat-K minimum wall time per query at one scale; first run also
-    records output rows and the executed plan's SinglePartition count."""
+def run_probe(spark, names, sf_dir: str, repeat: int, warm_dir: str | None = None):
+    """Repeat-K minimum wall time per query at one scale (after one warm-up
+    at ``warm_dir`` when given); also records output rows and the executed
+    plan's SinglePartition count."""
     out: dict[str, dict[str, object]] = {}
     for name in names:
-        fn = registry.QUERIES[name]
-        best, rows, sp = None, None, None
-        err = None
-        for k in range(repeat):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                n = df.count()
-            except Exception as e:  # noqa: BLE001
-                err = f"{type(e).__name__}: {e}"
-                break
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-            if k == 0:
-                rows = n
-                if not name.startswith("stream_"):
-                    plan = _executed_plan(df)
-                    sp = plan.count("Exchange SinglePartition")
-        out[name] = {"t": best, "rows": rows, "sp_exchanges": sp, "err": err}
-        status = f"{best:.2f}s {rows} rows" if err is None else f"ERR {err}"
+        run = time_query(spark, name, sf_dir, repeat=repeat, warm_dir=warm_dir)
+        if run.warmup_error:
+            print(f"  warmup {name}: {run.warmup_error}", flush=True)
+        best = min(run.walls, default=None)
+        sp = None
+        if run.error is None and not name.startswith("stream_"):
+            sp = _executed_plan(run.df).count("Exchange SinglePartition")
+        out[name] = {
+            "t": best, "rows": run.rows, "sp_exchanges": sp, "err": run.error
+        }
+        status = (
+            f"{best:.2f}s {run.rows} rows" if run.error is None
+            else f"ERR {run.error}"
+        )
         print(f"  {name}: {status}", flush=True)
     return out
 
@@ -305,17 +301,10 @@ def main() -> int:
     synth_report = validate_synthesis(spark, args.factor, dst)
     print("synthesis validated (counts + join integrity)", flush=True)
 
-    # warmup: touch every probe once at sf0.01 so cold-JIT lands outside
-    # the timed runs (bench protocol's warmup convention)
-    print("warmup at sf0.01 ...", flush=True)
-    for name in names:
-        try:
-            registry.QUERIES[name](spark, "/root/testdata/sf0.01").count()
-        except Exception as e:  # noqa: BLE001
-            print(f"  warmup {name}: {type(e).__name__}: {e}", flush=True)
-
+    # each probe warms once at sf0.01, before its 1x runs, so cold-JIT
+    # lands outside the timed runs (bench protocol's warmup convention)
     print(f"probing at 1x ({BASE_DIR}) ...", flush=True)
-    base = run_probe(spark, names, BASE_DIR, args.repeat)
+    base = run_probe(spark, names, BASE_DIR, args.repeat, warm_dir=WARM_DIR)
     print(f"probing at {args.factor}x ({dst}) ...", flush=True)
     scaled = run_probe(spark, names, dst, args.repeat)
 
